@@ -13,7 +13,12 @@ import org.apache.spark.sql.DataFrame
   */
 object Sinks {
 
-  private def esc(s: String): String = s.flatMap {
+  /** `s` as a quoted JSON string: quote, backslash and ALL control chars
+    * (< 0x20) escaped — one raw tab or CR would make the whole file
+    * unparseable. The one JSON string writer of the repo (metrics,
+    * learned programs, oracle SQL dumps, transport request bodies).
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -21,7 +26,7 @@ object Sinks {
     case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
-  }
+  } + "\""
 
   /** S6 — task-metrics JSON (`metrics.json`, `run_wrangler.py:267-268`).
     * Non-finite values (a -Inf accuracy from the null-program fallback
@@ -32,7 +37,7 @@ object Sinks {
     val body = metrics.toSeq.sortBy(_._1)
       .map { case (k, v) =>
         val jv = if (java.lang.Double.isFinite(v)) v.toString else "null"
-        s""""${esc(k)}": $jv"""
+        s"${jsonString(k)}: $jv"
       }
       .mkString("{", ", ", "}")
     Files.createDirectories(Paths.get(path).getParent)
@@ -43,7 +48,7 @@ object Sinks {
     * `run_wrangler.py:270-271`): program descriptions, one per task.
     */
   def writeLearnedProgramsJson(programs: Seq[String], path: String): Unit = {
-    val body = programs.map(p => s""""${esc(p)}"""").mkString("[", ", ", "]")
+    val body = programs.map(jsonString).mkString("[", ", ", "]")
     Files.createDirectories(Paths.get(path).getParent)
     Files.writeString(Paths.get(path), body)
   }

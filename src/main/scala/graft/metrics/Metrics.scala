@@ -130,30 +130,9 @@ object Metrics {
       predCol: String,
       goldCol: String,
       tol: Double = 0.021,
-      truncating: Boolean = true): DataFrame = {
-    val crc = tolerantEquals(col(predCol), col(goldCol), tol, truncating)
-    val g = normalize(col(goldCol))
-    val cnt = (p: Column) => sum(when(p, 1L).otherwise(0L))
-    df.agg(
-        count(lit(1)).as("total"),
-        cnt(crc).as("crc"),
-        cnt(g === "yes" && crc).as("tp"),
-        cnt(g === "yes" && !crc).as("fn"),
-        cnt(g === "no" && crc).as("tn"),
-        cnt(g === "no" && !crc).as("fp"))
-      .withColumn("prec", round(
-        col("tp").cast("double") / greatest(lit(1L), col("tp") + col("fp")), 6))
-      .withColumn("rec", round(
-        col("tp").cast("double") / greatest(lit(1L), col("tp") + col("fn")), 6))
-      .withColumn("acc", round(col("crc").cast("double") / col("total"), 6))
-      .withColumn("f1_legacy", round(
-        lit(2.0) * col("prec") * col("rec") /
-          greatest(lit(1.0), col("prec") + col("rec")), 6))
-      .withColumn("f1", round(
-        when(col("prec") + col("rec") > 0.0,
-          lit(2.0) * col("prec") * col("rec") / (col("prec") + col("rec")))
-          .otherwise(lit(0.0)), 6))
-  }
+      truncating: Boolean = true): DataFrame =
+    confusion(df, predCol, goldCol, tol, truncating,
+      count(lit(1)), lit(1L))
 
   /** [[confusionMetrics]] over a PRE-AGGREGATED (pred, gold, weight)
     * class-distribution table — the 100 TB shape for massive pair
@@ -170,13 +149,26 @@ object Metrics {
       goldCol: String,
       weightCol: String,
       tol: Double = 0.021,
-      truncating: Boolean = true): DataFrame = {
+      truncating: Boolean = true): DataFrame =
+    confusion(classes, predCol, goldCol, tol, truncating,
+      sum(col(weightCol)), col(weightCol))
+
+  /** The one derivation behind both confusion panels: `total` and the
+    * `w`-weighted crc/tp/fn/tn/fp counts in one aggregation, then the
+    * rounded ratios and both F1 variants on top. */
+  private def confusion(
+      df: DataFrame,
+      predCol: String,
+      goldCol: String,
+      tol: Double,
+      truncating: Boolean,
+      total: Column,
+      w: Column): DataFrame = {
     val crc = tolerantEquals(col(predCol), col(goldCol), tol, truncating)
     val g = normalize(col(goldCol))
-    val w = col(weightCol)
     val cnt = (p: Column) => sum(when(p, w).otherwise(0L))
-    classes.agg(
-        sum(w).as("total"),
+    df.agg(
+        total.as("total"),
         cnt(crc).as("crc"),
         cnt(g === "yes" && crc).as("tp"),
         cnt(g === "yes" && !crc).as("fn"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -149,9 +149,25 @@ object Streams {
       }
   }
 
+  /** A file stream over corpus table `table` under `dir`, typed by
+    * `batch`: the table's batch frame, which the caller has already
+    * loaded. A file source needs a user schema, and taking it from the
+    * loaded frame costs no second schema-inference job; the load has also
+    * set any read conf the table needs (events' nanosAsLong). The path is
+    * a glob, not the bare file: FileStreamSource requires its basePath to
+    * be a directory.
+    */
+  def corpusStream(batch: DataFrame, dir: String, table: String): DataFrame =
+    batch.sparkSession.readStream.schema(batch.schema)
+      .parquet(s"$dir/$table*.parquet")
+
   /** Run a streaming DataFrame to completion against a memory sink and
     * return the collected result table (test/dev harness; production would
     * `writeStream.format("parquet").option("checkpointLocation", …)`).
+    *
+    * SINK NAME: `prefix` plus a fresh UUID, so each drain reads back its
+    * own rows — two drains of one frame in a session (Bench's repeated
+    * passes) never share a sink, and callers pass only a readable prefix.
     *
     * COMPLETE-MODE CONTRACT: in `OutputMode.Complete` every micro-batch
     * re-emits the ENTIRE state table, so both the state and the per-batch
@@ -165,45 +181,37 @@ object Streams {
     * keys switch to watermarked Append-mode aggregation (state pruned by
     * event time) or Update mode with explicit state timeouts.
     * StreamingSpec's bounded-groups test pins this assumption.
+    *
+    * STATE-PARTITION CAP: state-store commit cost is per (partition ×
+    * state store × micro-batch) — every partition writes and fsyncs a
+    * delta file per batch — while the aggregation work above the store is
+    * already bounded by map-side partial aggregation (reduce input = map
+    * tasks × live keys, not stream rows). The drain therefore runs at
+    * `min(session shuffle partitions, 8)`: it tracks the state-dictionary
+    * size, never raises the session's count (small verify sessions run at
+    * 4), and leaves results unchanged (exact aggregation state). Measured
+    * at sf0.1/local[32]: 32 → 8 saves ~0.6-0.7 s per drain across the ~65
+    * drains of the bench suite.
+    *
+    * SESSION-GLOBAL MUTATION: the cap swaps spark.sql.shuffle.partitions
+    * for the duration of the drain and restores it in finally, also when
+    * the query throws — sound only because the harness runs queries
+    * SEQUENTIALLY on the session (Bench/Verify both do); concurrent query
+    * construction during a drain would plan with the capped value, and
+    * interleaved drains could restore each other's values. A concurrent
+    * deployment should clone the session (spark.newSession()) per drain
+    * instead.
     */
   def runToMemory(
-      spark: SparkSession,
       df: DataFrame,
-      name: String,
+      prefix: String,
       outputMode: OutputMode = OutputMode.Append): DataFrame = {
-    // STATE-PARTITION SIZING: state-store commit cost is per
-    // (partition × state store × micro-batch) — every partition writes
-    // and fsyncs a delta file per batch — while the aggregation work
-    // above the store is already bounded by map-side partial aggregation
-    // (reduce input = map tasks × live keys, not stream rows). Partition
-    // count should therefore track the STATE-DICTIONARY size, not the
-    // cluster width: default = the session setting capped at 8 (never
-    // raised — small verify sessions run at 4), overridable for
-    // genuinely huge state dictionaries via
-    // SPARK_GRAFT_STREAM_STATE_PARTITIONS. Result-invariant (exact
-    // aggregation state; Complete/Append output values unchanged).
-    // Measured at sf0.1/local[32]: 32 → 8 saves ~0.6-0.7 s per drain
-    // across the ~65 drains of the bench suite. Generalizes the
-    // per-query cap the stream-stream join has carried since round 2.
-    // SESSION-GLOBAL MUTATION: the cap swaps spark.sql.shuffle.partitions
-    // for the duration of the drain and restores it in finally — sound
-    // only because the harness runs queries SEQUENTIALLY on the session
-    // (Bench/Verify both do); concurrent query construction during a
-    // drain would plan with the capped value, and interleaved drains
-    // could restore each other's values. A concurrent deployment should
-    // clone the session (spark.newSession()) per drain instead.
+    val spark = df.sparkSession
+    val name =
+      prefix + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-      .map(v => v.toIntOption.filter(_ > 0).getOrElse(throw new
-        IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive int, " +
-            s"got '$v'")))
-      // the override exists for genuinely huge state dictionaries but is
-      // still capped at the session setting — "never raised" (a 4-core
-      // verify session must not suddenly run 32 state stores)
-      .map(v => math.min(v, prev.toInt))
-      .getOrElse(math.min(prev.toInt, 8))
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      math.min(prev.toInt, 8).toString)
     try {
       val q = df.writeStream
         .format("memory")

@@ -1,5 +1,7 @@
 package graft.transform
 
+import graft.io.Sinks.jsonString
+
 /** LLM-transport-backed program synthesis — the main-code form of the
   * reference's OpenAI function-calling loop
   * (`function_generator.py:44-92` call + tool-schema,
@@ -279,22 +281,6 @@ final class TransportSynthesizer(
   * which would corrupt content containing quotes or braces.
   */
 private[transform] object MiniJson {
-  def escape(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"'  => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\b' => b.append("\\b")
-      case '\f' => b.append("\\f")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append("\"").toString
-  }
-
   def parse(s: String): Any = {
     val p = new P(s); val v = p.value(); p.ws()
     require(p.eof, s"trailing JSON content at ${p.pos}")
@@ -403,11 +389,11 @@ final class HttpTransport(
     timeoutMs: Int = 30000) {
 
   val transport: Seq[ChatMessage] => String = { messages =>
-    val body = "{\"model\": " + MiniJson.escape(model) +
+    val body = "{\"model\": " + jsonString(model) +
       ", \"messages\": [" +
       messages.map(m =>
-        "{\"role\": " + MiniJson.escape(m.role) +
-          ", \"content\": " + MiniJson.escape(m.content) + "}")
+        "{\"role\": " + jsonString(m.role) +
+          ", \"content\": " + jsonString(m.content) + "}")
         .mkString(", ") +
       "]}"
     val url = java.net.URI.create(endpoint).toURL

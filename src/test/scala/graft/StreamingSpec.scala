@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
     in.addData(
       Ev(t(0), 1, "click", 1.0), Ev(t(60), 2, "click", 2.0),
       Ev(t(120), 1, "buy", 10.0), Ev(t(3700), 1, "click", 4.0))
-    val out = Streams.runToMemory(spark,
+    val out = Streams.runToMemory(
       Streams.windowedAgg(in.toDF(), window = "1 hour"),
       "win_agg", OutputMode.Complete)
     val rows = out
@@ -95,7 +95,7 @@ class StreamingSpec extends SparkSpec {
     val emitted = spark.table("sessapp_spec")
       .as[(Long, Long, Long)].collect().toSet
     // ground truth: the Complete-mode twin (all sessions) + the cutoff
-    val all = Streams.runToMemory(spark,
+    val all = Streams.runToMemory(
         stream.withColumn("__ts", Events.tsAsTimestamp(stream))
           .groupBy(session_window($"__ts", "30 minutes"), $"user_id")
           .agg(count(lit(1)).as("n_events"))
@@ -120,7 +120,7 @@ class StreamingSpec extends SparkSpec {
     in.addData(
       Ev(t(0), 1, "click", 1.0), Ev(t(10), 1, "click", 1.0),
       Ev(t(20), 2, "click", 2.0))
-    val out = Streams.runToMemory(spark,
+    val out = Streams.runToMemory(
       Streams.dedupWithinWatermark(in.toDF(), Seq("user_id", "event_type")),
       "dedup_stream")
     assert(out.count() === 2)
@@ -136,7 +136,7 @@ class StreamingSpec extends SparkSpec {
       Ev(t(7800), 1, "click", 3.0))
     // advance the watermark far enough to emit both sessions
     in.addData(Ev(t(100000), 9, "tick", 0.0))
-    val out = Streams.runToMemory(spark,
+    val out = Streams.runToMemory(
       Streams.sessionWindows(in.toDF(), gap = "30 minutes"),
       "sess_win")
     val u1 = out.filter($"user_id" === 1)
@@ -161,8 +161,8 @@ class StreamingSpec extends SparkSpec {
       streamedRaw.withColumn("ts_t", Events.tsAsTimestamp(streamedRaw))
     val agg = Streams.windowedAgg(streamed, tsCol = "ts_t",
       window = "1 hour", watermark = "2 hours")
-    val out = Streams.runToMemory(spark, agg, "real_events_win",
-      org.apache.spark.sql.streaming.OutputMode.Complete)
+    val out = Streams.runToMemory(agg, "real_events_win",
+      OutputMode.Complete)
     val streamTotal = out.agg(sum("n_events")).as[Long].head()
     val batchTotal = batch.count()
     assert(streamTotal === batchTotal)
@@ -229,7 +229,7 @@ class StreamingSpec extends SparkSpec {
     val joined = side("purchase", "p_user", "p_ts").join(
       side("click", "c_user", "c_ts"),
       expr("c_user = p_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"))
-    val out = Streams.runToMemory(spark, joined, "ss_join")
+    val out = Streams.runToMemory(joined, "ss_join")
     val users = out.select($"p_user").as[Long].collect().sorted.toSeq
     assert(users === Seq(1L, 4L), s"unexpected join survivors: $users")
   }
@@ -593,7 +593,7 @@ class StreamingSpec extends SparkSpec {
     in.addData(
       SessionEvent(1, 0, 1.0), SessionEvent(1, 10, 2.0), SessionEvent(1, 20, 3.0),
       SessionEvent(2, 0, 5.0), SessionEvent(2, 4000, 7.0))
-    val out = Streams.runToMemory(spark,
+    val out = Streams.runToMemory(
       Streams.cappedSessions(in.toDS(), gapSeconds = 1800L, maxEvents = 3L).toDF(),
       "capped_sess")
     val rows = out.as[SessionOut].collect()
@@ -603,5 +603,39 @@ class StreamingSpec extends SparkSpec {
     val u2 = rows.filter(_.user_id == 2)
     assert(u2.length === 1 && u2.head.closed_by === "gap" &&
       u2.head.n_events === 1 && u2.head.sum_value === 5.0)
+  }
+
+  test("runToMemory drain contract: shuffle partitions restored after a " +
+      "drain and after a failing one; every drain keeps its own sink") {
+    val key = "spark.sql.shuffle.partitions"
+    val session = spark.conf.get(key)
+    val dir = java.nio.file.Files.createTempDirectory("graft_drain").toString
+    def add(vs: Long*): Unit =
+      vs.toDF("v").coalesce(1).write.mode("append").parquet(dir)
+    // wider than the drain's cap of 8, so the drain really swaps it
+    spark.conf.set(key, "16")
+    // a view named like the drains' prefix: sinks are named apart from it
+    Seq(42L).toDF("v").createOrReplaceTempView("twice")
+    try {
+      add(1L, 2L, 2L)
+      val stream = spark.readStream.schema("v LONG").parquet(dir)
+      val counts = stream.groupBy($"v").count()
+      val first = Streams.runToMemory(counts, "twice", OutputMode.Complete)
+      assert(spark.conf.get(key) === "16")
+      add(3L)
+      val second = Streams.runToMemory(counts, "twice", OutputMode.Complete)
+      assert(first.as[(Long, Long)].collect().toSet ===
+        Set((1L, 1L), (2L, 2L)))
+      assert(second.as[(Long, Long)].collect().toSet ===
+        Set((1L, 1L), (2L, 2L), (3L, 1L)))
+      val failing = stream.select(
+        when($"v" > 2L, raise_error(lit("drain failure"))).otherwise($"v"))
+      intercept[Exception](Streams.runToMemory(failing, "failing"))
+      assert(spark.conf.get(key) === "16")
+      assert(spark.table("twice").as[Long].collect().toSeq === Seq(42L))
+    } finally {
+      spark.conf.set(key, session)
+      spark.catalog.dropTempView("twice")
+    }
   }
 }
