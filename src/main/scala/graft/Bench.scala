@@ -22,10 +22,14 @@ object Bench {
       // in milliseconds and would otherwise read as a bench speedup.
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => errors += name }
+      catch { case e: Throwable =>
+        errors += name
+        System.err.println(
+          s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
       val sec = (System.nanoTime() - t0) / 1e9
       // Free this query's localCheckpoint blocks before the next query:
-      // 166 queries share one block manager, and accumulated
+      // all queries share one block manager, and accumulated
       // MEMORY_AND_DISK checkpoint RDDs from earlier queries degrade
       // later ones through eviction/GC pressure — the r01/r02 driver
       // benches showed exactly the alphabetical-tail slowdown that
@@ -85,7 +89,7 @@ object Bench {
     // on exactly this — 17.26 s median / 2.74 s min on untouched code)
     val totalMin = names.map(n => samples(n).min).sum
     val full = s"""{"metric":"total","value":$total,"value_min":$totalMin,"unit":"sec","passes":$passes,"warmup_sec":$warmupSec,"errors":$errs,"queries":$qs,"queries_min":$qmins,"sf":"$sfDir"}"""
-    // The full per-query map (~6 KB for 166 queries) goes to a known file:
+    // The full per-query map (~15 KB for 419 queries) goes to a known file:
     // a consumer that captures only the TAIL of stdout truncates the long
     // line mid-JSON (both prior rounds' bench records show `parsed: null`
     // with a cut-off tail). stdout still gets the full line for humans,

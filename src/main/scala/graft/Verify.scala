@@ -37,9 +37,10 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         failures ::= name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
-      // bound block-manager growth across the 167-query sweep (same
+      // bound block-manager growth across the whole sweep (same
       // rationale as Bench: finished queries' checkpoint blocks are dead)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }

@@ -38,9 +38,16 @@ object TolerantEq {
 
   /** Null-tolerant (null → ""), called from codegen and interpreted eval. */
   def eval(l: UTF8String, r: UTF8String, tol: Double,
-      truncating: Boolean): Boolean = {
-    val p = (if (l == null) "" else l.toString).trim.toLowerCase
-    val g = (if (r == null) "" else r.toString).trim.toLowerCase
+      truncating: Boolean): Boolean =
+    eval(if (l == null) null else l.toString,
+      if (r == null) null else r.toString, tol, truncating)
+
+  /** The same predicate over JVM strings: the driver-side validation of
+    * candidate programs on demo rows uses it without a Spark job.
+    */
+  def eval(l: String, r: String, tol: Double, truncating: Boolean): Boolean = {
+    val p = (if (l == null) "" else l).trim.toLowerCase
+    val g = (if (r == null) "" else r).trim.toLowerCase
     if (p == g) return true
     val np = extract(p)
     val ng = extract(g)

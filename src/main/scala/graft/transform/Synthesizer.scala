@@ -1,50 +1,25 @@
 package graft.transform
 
 import graft.core.WranglerConfig
+import graft.metrics.TolerantEq
 
-/** Driver-side tolerant-equality + metrics mirror of graft.metrics.Metrics,
-  * for validating candidate programs on k≈3 demo rows without a Spark job
-  * (reference: `function_generator.py:138-160` + `utils/utils.py:83-128`).
-  * Uses the same sign-dropping regex / truncating-zip semantics.
+/** Driver-side demo accuracy for validating candidate programs on k≈3
+  * demo rows without a Spark job (reference: `function_generator.py:138-160`
+  * + `utils/utils.py:83-128`). The comparison is [[TolerantEq.eval]], the
+  * predicate the Spark metrics run, with the config's tolerance and
+  * truncating-zip setting.
   */
 object LocalEval {
-  private val numRe =
-    java.util.regex.Pattern.compile("[-+]?([0-9]*\\.?[0-9]+|[0-9]+/[0-9]+)")
-
-  def extractNumbers(s: String): Seq[Double] = {
-    val m = numRe.matcher(s)
-    val out = scala.collection.mutable.ArrayBuffer[Double]()
-    while (m.find()) {
-      val g = m.group(1)
-      out += (if (g.contains("/")) {
-        val Array(a, b) = g.split("/").map(_.toDouble); a / b
-      } else g.toDouble)
-    }
-    out.toSeq
-  }
-
-  def normalize(s: String): String =
-    Option(s).getOrElse("").trim.toLowerCase
-
-  def tolerantEquals(pred: String, gold: String, tol: Double = 0.021): Boolean = {
-    val p = normalize(pred); val g = normalize(gold)
-    if (p == g) true
-    else {
-      val np = extractNumbers(p); val ng = extractNumbers(g)
-      np.nonEmpty && ng.nonEmpty &&
-        np.zip(ng).forall { case (a, b) => math.abs(a - b) <= tol }
-    }
-  }
 
   /** Accuracy of a program over (input, gold) pairs; execution errors count
     * as the "Not excutable" sentinel (F2).
     */
   def accuracy(prog: TransformProgram, demos: Seq[(String, String)],
-      tol: Double = 0.021): Double = {
+      cfg: WranglerConfig = WranglerConfig.default): Double = {
     if (demos.isEmpty) return 0.0
     val ok = demos.count { case (in, gold) =>
       val pred = try prog.eval(in) catch { case _: Throwable => "Not excutable" }
-      tolerantEquals(pred, gold, tol)
+      TolerantEq.eval(pred, gold, cfg.tolerance, cfg.truncatingZip)
     }
     ok.toDouble / demos.size
   }
@@ -133,7 +108,7 @@ object RuleSynthesizer extends FunctionSynthesizer {
 
     val affineCands: Seq[TransformProgram] = {
       val pairs = demos.map { case (i, o) =>
-        (LocalEval.extractNumbers(i).headOption, LocalEval.extractNumbers(o).headOption)
+        (TolerantEq.extract(i).headOption, TolerantEq.extract(o).headOption)
       }
       if (pairs.forall(p => p._1.nonEmpty && p._2.nonEmpty)) {
         val xs = pairs.map(_._1.get); val ys = pairs.map(_._2.get)
@@ -258,10 +233,10 @@ object Validation {
     val executable =
       try { prog.eval(demos.head._1); true } catch { case _: Throwable => false }
     if (!executable) return (NotExecutable, 0.0)
-    val acc = LocalEval.accuracy(prog, demos, cfg.tolerance)
+    val acc = LocalEval.accuracy(prog, demos, cfg)
     if (acc < cfg.threshold) return (NotFit, acc)
     if (supervision.nonEmpty) {
-      val accSup = LocalEval.accuracy(prog, supervision, cfg.tolerance)
+      val accSup = LocalEval.accuracy(prog, supervision, cfg)
       if (accSup < cfg.thresholdSup) return (NotGeneralizable, acc)
     }
     (Validated, acc)

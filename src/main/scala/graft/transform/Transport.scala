@@ -450,9 +450,6 @@ final class HttpTransport(
   * `GRAFT_LLM_ENDPOINT` (required), `GRAFT_LLM_MODEL`, `GRAFT_LLM_API_KEY`.
   */
 object Synthesizers {
-  def fromEnv(env: Map[String, String] = sys.env): FunctionSynthesizer =
-    forTask(env)(graft.core.TaskKind.DataTransformation)
-
   /** Task-aware factory (the transport path selects the per-task prompt
     * template exactly like `formulate_prompt`'s routing): what the
     * wrangler pipeline plugs into `WranglerMain.runAllSplits`.

@@ -2,7 +2,7 @@ package graft
 
 
 import org.apache.spark.sql.functions._
-import graft.core.WranglerConfig
+import graft.core.{TaskKind, WranglerConfig}
 import graft.transform._
 import graft.transform.TransformProgram._
 
@@ -99,7 +99,8 @@ class TransformSpec extends SparkSpec {
 
   test("http synthesizer selection is config-gated") {
     // default stays the deterministic rule synthesizer — no HTTP anywhere
-    assert(Synthesizers.fromEnv(Map.empty) == RuleSynthesizer)
+    assert(Synthesizers.forTask(Map.empty)(TaskKind.DataTransformation) ==
+      RuleSynthesizer)
     // explicit http WITHOUT an endpoint refuses loudly
     intercept[IllegalArgumentException] {
       Synthesizers.forTask(Map("GRAFT_SYNTHESIZER" -> "http"))
@@ -294,6 +295,18 @@ class TransformSpec extends SparkSpec {
       Validation.Validated)
   }
 
+  test("validation honours truncatingZip, as the Spark metrics do") {
+    // "1 2" vs "1": the truncating compare zips [1, 2] with [1] and matches;
+    // the strict compare rejects the length mismatch
+    val demos = Seq("1 2" -> "1")
+    val truncating = WranglerConfig.default
+    assert(Validation.validate(Identity, demos, Seq.empty, truncating) ==
+      ((Validation.Validated, 1.0)))
+    val strict = truncating.copy(truncatingZip = false)
+    assert(Validation.validate(Identity, demos, Seq.empty, strict) ==
+      ((Validation.NotFit, 0.0)))
+  }
+
   test("trialLoop returns the null program when nothing fits") {
     val cfg = WranglerConfig.default.copy(k = 2)
     val impossible = Seq("a" -> "xyzzy1", "a" -> "xyzzy2")  // contradictory
@@ -486,12 +499,13 @@ class TransformSpec extends SparkSpec {
     assert(synth.calls(1).last.content.contains("failed validation"))
   }
 
-  test("Synthesizers.fromEnv: rule default, transport selectable") {
-    assert(Synthesizers.fromEnv(Map.empty) === RuleSynthesizer)
-    assert(Synthesizers.fromEnv(Map("GRAFT_SYNTHESIZER" -> "transport"))
-      .isInstanceOf[TransportSynthesizer])
+  test("Synthesizers.forTask: rule default, transport selectable") {
+    val transformation = TaskKind.DataTransformation
+    assert(Synthesizers.forTask(Map.empty)(transformation) === RuleSynthesizer)
+    assert(Synthesizers.forTask(Map("GRAFT_SYNTHESIZER" -> "transport"))(
+      transformation).isInstanceOf[TransportSynthesizer])
     intercept[IllegalArgumentException](
-      Synthesizers.fromEnv(Map("GRAFT_SYNTHESIZER" -> "gpt4")))
+      Synthesizers.forTask(Map("GRAFT_SYNTHESIZER" -> "gpt4"))(transformation))
   }
 
   test("quoted example rendering survives hostile strings") {

@@ -2,25 +2,31 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.core.TaskKind
+import graft.core.{TaskKind, WranglerConfig}
+import graft.sample.Samplers
 import graft.tasks.WranglerMain
-import graft.tasks.WranglerMain.TaskInput
+import graft.tasks.WranglerMain.SplitInput
 import graft.transform.TransformProgram
 
 class WranglerMainSpec extends SparkSpec {
   import spark.implicits._
 
-  private def upperTask = {
-    val rows = (1 to 20).map(i => (i.toLong, s"item $i", s"ITEM $i"))
-    TaskInput("upper", TaskKind.DataTransformation,
-      rows.toDF("ord", "text", "label_str"), "ord", None)
+  /** A transformation task over one frame, split positionally (the first
+    * k rows train, the rest test). */
+  private def positionalTask(name: String, rows: Seq[(Long, String, String)]) = {
+    val (train, test) = Samplers.positionalSplit(
+      rows.toDF("ord", "text", "label_str"), "ord", WranglerConfig.default.k)
+    SplitInput(name, TaskKind.DataTransformation, train, test, None)
   }
 
-  private def stripTask = {
-    val rows = (1 to 20).map(i => (i.toLong, s"val: $i", s"$i"))
-    TaskInput("strip", TaskKind.DataTransformation,
-      rows.toDF("ord", "text", "label_str"), "ord", None)
-  }
+  private def runTask(i: SplitInput) =
+    WranglerMain.runTaskSplit(i.name, i.kind, i.train, i.test, i.instruction)
+
+  private def upperTask =
+    positionalTask("upper", (1 to 20).map(i => (i.toLong, s"item $i", s"ITEM $i")))
+
+  private def stripTask =
+    positionalTask("strip", (1 to 20).map(i => (i.toLong, s"val: $i", s"$i")))
 
   test("transport-backed synthesizer through the full task pipeline " +
       "matches the rule path; per-task template selected") {
@@ -41,17 +47,16 @@ class WranglerMainSpec extends SparkSpec {
     assert(synth.calls.head.exists(_.content.contains("spelling-error")))
   }
 
-  test("runTask synthesizes, applies, and scores a transformation") {
-    val r = WranglerMain.runTask(upperTask).get
+  test("runTaskSplit synthesizes, applies, and scores a positional split") {
+    val r = runTask(upperTask).get
     assert(r.program === TransformProgram.UpperCase)
     assert(r.metrics("acc") === 1.0)
     assert(r.applied.count() === 17)   // 20 - k(3)
   }
 
   test("empty test split is skipped (P11 guard)") {
-    val tiny = TaskInput("tiny", TaskKind.DataTransformation,
-      Seq((1L, "a", "A")).toDF("ord", "text", "label_str"), "ord", None)
-    assert(WranglerMain.runTask(tiny).isEmpty)
+    val tiny = positionalTask("tiny", Seq((1L, "a", "A")))
+    assert(runTask(tiny).isEmpty)
   }
 
   test("runTaskSplit: separate train/test frames (error-detection dir shape)") {
@@ -79,9 +84,9 @@ class WranglerMainSpec extends SparkSpec {
       Seq(TransformProgram.UpperCase, TransformProgram.UpperCase))
   }
 
-  test("runAll writes metrics.json + learned_funcs.json with global stats") {
+  test("runAllSplits writes metrics.json + learned_funcs.json with global stats") {
     val out = Files.createTempDirectory("graft_wrangler").toString
-    val (results, metrics) = WranglerMain.runAll(
+    val (results, metrics) = WranglerMain.runAllSplits(
       spark, Seq(upperTask, stripTask), out)
     assert(results.length === 2)
     assert(metrics("acc_mean") === 1.0 && metrics("acc_std") === 0.0)
